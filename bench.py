@@ -30,15 +30,6 @@ writes this round's BENCH artifact; pass SPARK_GRAFT_BENCH_ROUND=N to
 pin it explicitly. A derived N never overwrites an existing file
 (collision → warn + skip), so a double run can't clobber the artifact
 ``tools/bench_compare.py`` pairs with the driver's BENCH_r{N}.json.
-
-``--changed-only`` benches just the keys whose source hash differs
-from the attested snapshot (i.e. edited since their last driver
-verdict) plus keys with no timing in the latest ``bench_full_r*.json``
-— the fast iteration lane for a 267-key pack whose full warm sweep
-runs ~3 min (VERDICT r8 item 6). Subset runs print the same JSON-line
-shape with a ``"subset": "changed_only"`` marker and persist to
-``bench_full_r{N}_changed.json``, never the round artifact the driver
-pairs with.
 """
 
 from __future__ import annotations
@@ -68,35 +59,8 @@ def main() -> None:
     os.environ.pop("SPARK_GRAFT_MEMO_DIR", None)
     sf = float(Path(sf_dir).name.removeprefix("sf") or 0) if "sf" in Path(sf_dir).name else 0.1
     cold = "--cold" in sys.argv[1:] or os.environ.get("SPARK_GRAFT_BENCH_COLD") == "1"
-    changed_only = "--changed-only" in sys.argv[1:]
 
     queries = dict(sorted(all_queries().items()))
-    if changed_only:
-        from parquet_stream_writer_spark.operators import _source_stale_keys
-
-        here = Path(__file__).resolve().parent
-        stale = _source_stale_keys(queries)
-        timed: set[str] = set()
-        # Sort by parsed round number, not filename — lexicographic
-        # order puts r100 before r99 (ADVICE r9).
-        fulls = sorted(
-            here.glob("bench_full_r[0-9]*.json"),
-            key=lambda p: int(re.search(r"r(\d+)", p.name).group(1)),
-        )
-        fulls = [p for p in fulls if "_cold" not in p.name and "_changed" not in p.name]
-        if fulls:
-            try:
-                timed = set(json.loads(fulls[-1].read_text()).get("queries", {}))
-            except (OSError, ValueError):
-                pass
-        subset = {k for k in queries if k in stale or k not in timed}
-        print(
-            f"bench: --changed-only → {len(subset)}/{len(queries)} keys "
-            f"({len(stale & set(queries))} source-stale, "
-            f"{len(subset) - len(stale & subset)} untimed)",
-            file=sys.stderr,
-        )
-        queries = {k: v for k, v in queries.items() if k in subset}
 
     # Count memo traffic per query so the payload can mark which keys
     # rode (or populated) the shared dedup mining memo — their
@@ -240,8 +204,6 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
     }
-    if changed_only:
-        payload["subset"] = "changed_only"
     print(json.dumps(payload))
     # The driver's BENCH_r{N}.json wrapper captures only a truncated
     # tail of the stdout line, losing the head's per-query times every
@@ -255,8 +217,6 @@ def main() -> None:
         # one is the standalone per-query costing (a pinned cold run
         # must never clobber the warm artifact).
         suffix = "_cold" if cold else ""
-        if changed_only:
-            suffix += "_changed"
         pinned = os.environ.get("SPARK_GRAFT_BENCH_ROUND")
         if pinned is not None:
             n_round = int(pinned)  # explicit round may overwrite

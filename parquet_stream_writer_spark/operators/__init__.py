@@ -8,8 +8,8 @@ Each submodule exports:
   on the same parquet tables; keys without an oracle get a rows-only
   check by the driver.
 
-``all_queries()`` / ``all_oracles()`` merge the submodules for the
-driver entry point (``__spark_entry__.py``).
+``all_queries()`` / ``all_oracles()`` merge the submodules, in
+``_modules()`` order, for the entry point ``__spark_entry__.py``.
 """
 
 from __future__ import annotations
@@ -17,82 +17,6 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-
-# Registry ordering matters: the round driver's CORRECTNESS gate checks a
-# prefix window of the registry (50 entries in round 1).  Keys that still
-# need a driver verdict — fixed-this-round queries and everything the
-# round-1 window never reached — are listed first so they land inside the
-# window; the already-driver-green relational pack trails.  Round-1 green
-# keys that fall out of the window keep their recorded verdict.
-# On top of this static seed order, ``_prioritized`` consults the recorded
-# CORRECTNESS_r*.json verdicts and floats every key without a green row to
-# the front, so the window rotates itself each round.
-_PRIORITY = [
-    # Round-1 driver-red, fixed in round 2 — need re-verification first.
-    "json_extraction",
-    "agg_pivot",
-    "agg_approx_quantile",
-    "subquery_scalar_corr",
-    # Relational keys the round-1 window never reached.
-    "q20_excess_volume_supplier",
-    "agg_string_listagg",
-    "nested_map_ops",
-    # The whole LLM-pipeline surface (undriven in round 1): dedup,
-    # similarity, text, multimodal, pipeline, then streaming_batch.
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_connected_components",
-    "dedup_fuzzy_levenshtein",
-    "similarity_cosine_topk",
-    "similarity_ann_lsh",
-    "similarity_pair_topk",
-    "similarity_ivf",
-    "dedup_embedding_cosine",
-    "embedding_pca_by_label",
-    "embedding_quantize_int8",
-    "embedding_kmeans_lloyd",
-    "similarity_ivf_recall",
-    "text_token_stats",
-    "text_quality_score",
-    "text_langid",
-    "text_fingerprint",
-    "text_token_count_bpe",
-    "text_blocklist_redact",
-    "text_pack_sequences",
-    "text_contamination_ngram",
-    "text_repetition_gopher",
-    "text_tokenize_ids",
-    "text_dup_span_fraction",
-    "text_perplexity_proxy",
-    "text_chunk_windows",
-    "text_tfidf_top_term",
-    "multimodal_image_meta",
-    "multimodal_frame_sample",
-    "multimodal_audio_features",
-    "join_asof",
-    "join_range_bands",
-    "sample_hash_split",
-    "sample_stratified",
-    "join_salted",
-    "profile_table",
-    "sample_temperature_mix",
-    "merge_upsert_scd",
-    "events_tumbling",
-    "events_sliding",
-    "events_sessionize",
-    "events_enrich_dim",
-    "events_gaps_islands",
-    "events_gap_fill",
-    "events_funnel",
-    "events_time_range_window",
-    "events_retention_cohort",
-    "events_anomaly_zscore",
-    "events_wau_rolling",
-    "events_markov_transitions",
-    "events_rfm_segmentation",
-]
 
 
 def _modules():
@@ -127,324 +51,15 @@ def _modules():
     )
 
 
-import functools
-
-
-def _correctness_snapshot() -> tuple[tuple[str, float], ...]:
-    """(path, mtime) fingerprint of the CORRECTNESS files — the cache
-    key for :func:`_driver_green_keys_cached`, so a long-lived process
-    that writes a new CORRECTNESS_r*.json sees fresh verdicts on the
-    next registry call instead of a stale lru_cache hit."""
-    import glob
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    out = []
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        try:
-            out.append((path, os.path.getmtime(path)))
-        except OSError:
-            continue
-    return tuple(out)
-
-
-def _verdicts() -> dict[str, tuple[bool, int]]:
-    return dict(_verdicts_cached(_correctness_snapshot()))
-
-
-@functools.lru_cache(maxsize=4)
-def _verdicts_cached(
-    snapshot: tuple[tuple[str, float], ...]
-) -> tuple[tuple[str, tuple[bool, int]], ...]:
-    """Per key, the LATEST recorded driver verdict across the
-    CORRECTNESS_r*.json files as (green, round): green = hash-match
-    for oracled queries or a completed rows-only check for no-oracle
-    queries; round = the round number parsed from the file name.
-    Later rounds override earlier ones, so a query that regresses
-    from green to red rotates back into the driver's prefix window
-    for re-verification.  Cached on the files' (path, mtime)
-    snapshot, so new driver results invalidate it."""
-    import json
-    import re
-
-    verdict: dict[str, tuple[bool, int]] = {}
-    for path, _mtime in snapshot:
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else 0
-        try:
-            with open(path) as fh:
-                data = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        for key, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            green = row.get("hash_match") is True or (
-                row.get("err") == "no_oracle" and row.get("spark_rows") is not None
-            )
-            verdict[key] = (green, rnd)
-    return tuple(verdict.items())
-
-
-#: Committed snapshot of each query key's last driver-ATTESTED source
-#: hash, advanced by ``tools/record_query_hashes.py --fold`` at round
-#: start from the session-end PENDING_QUERY_HASHES.json, for exactly
-#: the keys the new CORRECTNESS artifact verified green.  A key whose
-#: CURRENT source hash differs from the snapshot was edited after its
-#: last driver verdict, so its green verdict is stale and it floats
-#: back into the verification window.
-_HASH_SNAPSHOT = "QUERY_SOURCE_HASHES.json"
-
-
-def _module_helper_hash(mod) -> str:
-    """sha256 over the sources of an operator module's HELPER
-    functions — every module-level function that is NOT itself a
-    registered query.  Editing a shared helper (the dedup mining
-    core, a decode kernel, a kernel the queries execute) floats every
-    key of the module — the round-4 gap where a mining-core rewrite
-    left its dependents' driver verdicts stale (VERDICT r4
-    §missing-2).  Deliberately NOT a whole-module-text hash: APPENDING
-    a sibling query (+ its oracle constant) must not float the keys
-    it cannot affect, or every module extension floods the 50-key
-    driver window with spuriously-stale keys.  Module constants a
-    query depends on are covered via the key's evaluated oracle
-    string (interpolated f-strings) or the helper bodies that use
-    them; a constant referenced only by name inside a query function
-    is the one residual blind spot (verdict-age rotation backstops)."""
-    import hashlib
-    import inspect
-
-    query_fns = {id(f) for f in getattr(mod, "QUERIES", {}).values()}
-    parts = []
-    for name in sorted(vars(mod)):
-        obj = vars(mod)[name]
-        if (
-            inspect.isfunction(obj)
-            and obj.__module__ == mod.__name__
-            and id(obj) not in query_fns
-        ):
-            try:
-                parts.append(inspect.getsource(obj))
-            except (OSError, TypeError):
-                parts.append(name)
-    return hashlib.sha256("\x00".join(parts).encode()).hexdigest()
-
-
-def _xmodule_helper_sources(mod) -> list[str]:
-    """Source of the private helpers ``mod`` imports from SIBLING
-    operator modules at module level (manual dependency map) — so a
-    rewrite of e.g. the shared hex→int kernels floats the keys of the
-    modules that execute them, not just dedup's own."""
-    import inspect
-
-    from parquet_stream_writer_spark.operators import dedup
-
-    deps = {
-        "pipeline": (dedup._hex4_to_int_sql, dedup._hex_to_int_sql),
-        "streaming_batch": (dedup._hex4_to_int_sql, dedup._hex_to_int_sql),
-        "text": (dedup._hex_prefix_int, dedup._hex_to_int_sql),
-    }.get(mod.__name__.rsplit(".", 1)[-1], ())
-    out = []
-    for fn in deps:
-        try:
-            out.append(inspect.getsource(fn))
-        except (OSError, TypeError):
-            out.append("unhashable")
-    return out
-
-
-def query_source_hash(fn) -> str:
-    """sha256 over everything a query key executes that lives in the
-    operator pack: the query function's own source, its defining
-    module's helper hash (:func:`_module_helper_hash`), and the source
-    of cross-module helpers from the manual dependency map
-    (:func:`_xmodule_helper_sources`).  Package-level shared infra
-    (``sources``, ``functions``, ``session``) is deliberately NOT
-    folded in — a change there invalidates all 132 keys at once, which
-    the window can't absorb; verdict-age rotation is the backstop."""
-    import hashlib
-    import inspect
-    import sys
-
-    try:
-        parts = [inspect.getsource(fn)]
-    except (OSError, TypeError):
-        return "unhashable"
-    mod = sys.modules.get(getattr(fn, "__module__", None))
-    if mod is not None and hasattr(mod, "QUERIES"):
-        parts.append(_module_helper_hash(mod))
-        parts.extend(_xmodule_helper_sources(mod))
-        # The key's EVALUATED oracle SQL: covers module constants a
-        # query interpolates into its oracle (cap/threshold edits
-        # change the comparison itself, so they must re-verify).
-        oracle = getattr(mod, "ORACLE", {})
-        for key, val in getattr(mod, "QUERIES", {}).items():
-            if val is fn and key in oracle:
-                parts.append(oracle[key])
-    return hashlib.sha256("\x00".join(parts).encode()).hexdigest()
-
-
-def _snapshot_doc() -> dict:
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.path.join(os.path.dirname(root), _HASH_SNAPSHOT)
-    try:
-        with open(path) as fh:
-            return json.load(fh)
-    except (OSError, ValueError):
-        return {}
-
-
-def _source_stale_keys(merged: dict) -> frozenset[str]:
-    """Keys whose implementation changed since the committed hash
-    snapshot (i.e. since their last driver verdict was recorded)."""
-    recorded = _snapshot_doc().get("hashes", {})
-    return frozenset(
-        k
-        for k, fn in merged.items()
-        if k in recorded and recorded[k] != query_source_hash(fn)
-    )
-
-
-def oracle_text_hash(key: str) -> str | None:
-    """sha256 of the key's EVALUATED oracle SQL (None if no oracle) —
-    the comparison contract itself, separately from the combined
-    :func:`query_source_hash`.  Recorded alongside the source hashes so
-    :func:`_oracle_stale_keys` can tell a re-implemented key (old
-    verdict still attests the same comparison) from a re-contracted one
-    (old verdict attests a comparison that no longer exists)."""
-    import hashlib
-
-    for mod in _modules():
-        oracle = getattr(mod, "ORACLE", {})
-        if key in getattr(mod, "QUERIES", {}):
-            if key not in oracle:
-                return None
-            return hashlib.sha256(oracle[key].encode()).hexdigest()
-    return None
-
-
-def _oracle_stale_keys(merged: dict) -> frozenset[str]:
-    """Keys whose evaluated ORACLE TEXT changed since attestation
-    (VERDICT r9 item 3): their green verdict attests a comparison that
-    no longer exists, so they rank like never-verified keys instead of
-    waiting behind older-but-contract-intact cohorts.  Keys absent from
-    the snapshot's ``oracle_hashes`` (pre-r10 attestations) fall back
-    to plain verdict-age rotation."""
-    recorded = _snapshot_doc().get("oracle_hashes", {})
-    return frozenset(
-        k
-        for k in merged
-        if k in recorded and recorded[k] != oracle_text_hash(k)
-    )
-
-
-def _prioritized(merged: dict) -> dict:
-    """Order the registry so the driver's 50-key prefix window always
-    covers the keys most in need of a fresh verdict:
-
-    1. keys with no green verdict at all (new queries, regressions),
-       and keys whose evaluated ORACLE text changed since attestation
-       (round-10 change, VERDICT r9 item 3: an oracle rewrite retires
-       the attested comparison itself, so the key is unverified under
-       its new contract, not merely stale) — these MUST land in the
-       window;
-    2. green keys by OLDEST verdict round first; within the same
-       round, source-stale keys (edited since the committed hash
-       snapshot) ahead of untouched ones.
-
-    Verdict AGE outranks source-staleness across rounds (round-8
-    change): the old stale-tier-first ordering let a burst of edits
-    to recently-verified keys displace r2-vintage verdicts out of the
-    window two rounds running (VERDICT r6 item 4 → r7 backlog).  A
-    key's recorded hash advances ONLY when a driver artifact attests
-    that exact source (round-9 change, ADVICE r8: the snapshot tool
-    writes a full PENDING_QUERY_HASHES.json at session end and
-    ``--fold`` copies pending→attested at next round start for
-    exactly the keys green in the new CORRECTNESS file), so an edited
-    key stays stale-marked until a window actually verifies it and
-    jumps its cohort's untouched keys when its round comes up —
-    staleness is never silently laundered, no window prediction is
-    involved, and the oldest attestations always refresh first.
-
-    Within each rank the static ``_PRIORITY`` seed order is kept
-    (Python's sort is stable)."""
-    seeded = {k: merged[k] for k in _PRIORITY if k in merged}
-    seeded.update({k: v for k, v in merged.items() if k not in seeded})
-    verdicts = _verdicts()
-    stale = _source_stale_keys(merged)
-    oracle_stale = _oracle_stale_keys(merged)
-
-    def rank(key: str) -> tuple[int, int, int]:
-        green, rnd = verdicts.get(key, (False, 0))
-        if not green or key in oracle_stale:
-            return (0, 0, 0)
-        return (1, rnd, 0 if key in stale else 1)
-
-    return {k: seeded[k] for k in sorted(seeded, key=rank)}
-
-
-def _warn_if_fold_overdue(root: str | None = None) -> None:
-    """One-time stderr nudge when a new CORRECTNESS artifact has
-    landed but its verdicts were never folded into the attested hash
-    snapshot (``tools/record_query_hashes.py --fold`` — the mandatory
-    round-start step under the round-9 attestation protocol).  An
-    unfolded round leaves every verified key stale-marked, so the
-    window would wastefully re-verify the same 50 keys.  stderr only:
-    bench.py's stdout JSON-line contract must stay clean."""
-    import json
-    import os
-    import sys
-
-    if getattr(_warn_if_fold_overdue, "_done", False):
-        return
-    _warn_if_fold_overdue._done = True
-    root = root or os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    try:
-        with open(os.path.join(root, "PENDING_QUERY_HASHES.json")) as fh:
-            pending_round = json.load(fh).get("for_round_after", -1)
-        with open(os.path.join(root, _HASH_SNAPSHOT)) as fh:
-            attested_round = json.load(fh).get("as_of_round", -1)
-    except (OSError, ValueError):
-        return
-    latest = max((r for _p, r in _correctness_rounds()), default=0)
-    if latest > pending_round and latest > attested_round:
-        print(
-            f"[operators] CORRECTNESS_r{latest} has landed but its verdicts "
-            f"are not folded into {_HASH_SNAPSHOT} (attested round "
-            f"{attested_round}) — run `python tools/record_query_hashes.py "
-            f"--fold` before editing queries, or the window re-verifies "
-            f"stale-marked keys it already proved.",
-            file=sys.stderr,
-        )
-
-
-def _correctness_rounds() -> list[tuple[str, int]]:
-    import re
-
-    return [
-        (path, int(m.group(1)))
-        for path, _mtime in _correctness_snapshot()
-        if (m := re.search(r"CORRECTNESS_r(\d+)\.json$", path))
-    ]
-
-
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     merged: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for mod in _modules():
         merged.update(mod.QUERIES)
-    _warn_if_fold_overdue()
-    return _prioritized(merged)
+    return merged
 
 
 def all_oracles() -> dict[str, str]:
     merged: dict[str, str] = {}
     for mod in _modules():
         merged.update(mod.ORACLE)
-    return _prioritized(merged)
+    return merged

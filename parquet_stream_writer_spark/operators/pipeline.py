@@ -1699,9 +1699,7 @@ def pipeline_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Engine-portable row fingerprint: md5 over pipe-joined stable
     # fields, with the price carried as integer cents (half-up) so
     # double→string formatting differences between Spark and DuckDB
-    # can never perturb the hash.  (Inline, not a module helper — a
-    # shared helper would float every pipeline key's verdict
-    # staleness; see operators.__init__._module_helper_hash.)
+    # can never perturb the hash.
     def fingerprint(price_cents: str) -> str:
         return (
             "md5(concat_ws('|', CAST(o_orderkey AS STRING), CAST(o_custkey AS STRING), "

@@ -3,17 +3,11 @@ REGISTERED with the driver in round 7 (this module is now in
 ``operators._modules()``; every key here is live in
 ``__spark_entry__.queries()``).
 
-The round driver verifies a 50-key prefix window of the registry per
-round.  Round 6's window is exactly filled (36 new keys + 14
-edited-key re-verifications, see SURVEY §7 session 3), so these
-operators live in a module deliberately OUTSIDE
-``operators._modules()``: they ship fully implemented with DuckDB
+Round 6 built these operators in a module OUTSIDE
+``operators._modules()``: they shipped fully implemented with DuckDB
 oracle twins and local differential tests
-(tests/test_staged_operators.py) but consume no window slot.  Round 7
-flips them live by adding ``staged`` to ``_modules()`` — a one-line
-change that perturbs no other module's staleness hash, upon which
-every key here enters the window as tier-0 (unverified) and gets its
-driver verdict.
+(tests/test_staged_operators.py) before going live.  Round 7 flipped
+them live by adding ``staged`` to ``_modules()`` — a one-line change.
 
 Keys staged here follow every pack convention: DataFrame-first
 implementation, engine-portable arithmetic (pround / hash buckets /
@@ -34,7 +28,7 @@ Round-7 registration checklist:
    three; ``similarity_mmr_rerank``'s non-equi candidate scan sits
    behind a localCheckpoint and does not appear in its final plan;
 3. fold the staged rows of SURVEY §2c into the main inventory (drop
-   the "(staged)" marker) and re-run tools/record_query_hashes.py.
+   the "(staged)" marker).
 """
 
 from __future__ import annotations

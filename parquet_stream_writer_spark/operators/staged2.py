@@ -19,8 +19,7 @@ Round-8 registration record (the round-7 checklist, executed):
 2. ``staged2`` added to ``operators._modules()`` (after ``staged``);
 3. ``_STAGED2_NLJ_OK`` folded into the plan sweep's ``_NLJ_OK``
    whitelist in tests/test_plan_introspection.py;
-4. staged2 rows folded into SURVEY §2c; QUERY_SOURCE_HASHES.json
-   re-snapshotted window-aware at round-8 session end.
+4. staged2 rows folded into SURVEY §2c.
 """
 
 from __future__ import annotations

@@ -23,17 +23,7 @@ Round-9 registration record (mirror of staged2's round-8 record):
 2. ``staged3`` added to ``operators._modules()`` (after ``staged2``);
 3. ``_STAGED3_NLJ_OK`` (tests/test_staged3_operators.py) folded into
    the plan sweep's ``_NLJ_OK`` in tests/test_plan_introspection.py;
-4. SURVEY §2c rows were folded at build time;
-   tools/record_query_hashes.py (attestation-driven, round-9
-   semantics) runs at session END.
-
-Round-9 window composition (age-first rotation over the 267-key
-registry): 28 staged3 tier-0 slots + 22 green slots taken
-oldest-cohort-first — the 12 remaining r3-vintage keys, then the
-oldest cohort with source-stale keys (dedup memo persistence +
-carrier/comment edits + the round-9 q1/q22 integer-cents rewrite)
-leading via the stale-first tie-break; the overflow spills to
-round 10 (recorded in SURVEY §7).
+4. SURVEY §2c rows were folded at build time.
 """
 
 from __future__ import annotations
@@ -1442,7 +1432,8 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             degs.agg(
                 F.lit(rnd).alias("round"),
                 F.count(F.lit(1)).alias("n_nodes"),
-                (F.sum("deg") / 2).cast("long").alias("n_edges"),
+                # a round that peels every edge sums no rows: 0, not NULL
+                F.coalesce(F.sum("deg") / 2, F.lit(0)).cast("long").alias("n_edges"),
             )
         )
     out = snapshots[0]

@@ -16,9 +16,7 @@ sf0.001 AND sf0.01 AND sf0.1 (tools/staged2_check.py --staged4),
 adversarial sweep 19/19 clean, partition invariance 19/19, 75 pack
 tests green; ``_STAGED4_NLJ_OK`` folded into the plan sweep's
 ``_NLJ_OK``; the staging guard inverted to
-``test_staged4_keys_registered``.  Window at the flip: 19 staged4
-tier-0 + q1/q22 (oracle-recontracted tier-0) + the 29 oldest
-r4-vintage greens (spills recorded in SURVEY §7 round-10 item 5).
+``test_staged4_keys_registered``.
 """
 
 from __future__ import annotations

@@ -96,15 +96,15 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     reuse the same partitioning (no second exchange)."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_sec = _SESSION_GAP_MIN * 60
+    # Microsecond gaps, not unix_timestamp's truncated seconds: the
+    # oracle's epoch() keeps the fraction, so two events 1800.5 s
+    # apart must open two sessions on both sides.
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    gap_us = _SESSION_GAP_MIN * 60 * 1_000_000
     flagged = ev.withColumn(
         "new_session",
         F.when(
-            F.lag("ts").over(w).isNull()
-            | (
-                F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-                > gap_sec
-            ),
+            F.lag("ts").over(w).isNull() | (us - F.lag(us).over(w) > gap_us),
             1,
         ).otherwise(0),
     )

@@ -986,11 +986,8 @@ def streaming_seasonality_grid_hll(stream: DataFrame) -> DataFrame:
 
 #: Session gap in SECONDS — the same 30 minutes as the batch
 #: ``streaming_batch.events_sessionize`` (its `_SESSION_GAP_MIN`).
-#: The batch operator compares ``unix_timestamp`` differences, i.e.
-#: TRUNCATED epoch seconds, so the twin's merge/eviction arithmetic
-#: works in truncated seconds too — a µs-grain gap test would split
-#: a pair the batch operator keeps together whenever the fractional
-#: parts straddle the 1800 s boundary.
+#: The batch operator compares ``unix_micros`` differences, so the
+#: twin's merge/eviction arithmetic works at the same µs grain.
 _SESSIONIZE_GAP_S = 30 * 60
 
 _SESSIONIZE_OUTPUT_SCHEMA = (
@@ -1007,11 +1004,11 @@ _SESSIONIZE_STATE_SCHEMA = (
 )
 
 
-def _merge_intervals(iv, gap_s):
+def _merge_intervals(iv, gap_us):
     """Gap-merge a list of (start_us, end_us, n, cents) interval
     summaries: sort by (start, end) and fold neighbours whose
-    TRUNCATED-SECOND gap is <= gap_s (exactly the batch operator's
-    ``unix_timestamp(ts) - unix_timestamp(lag(ts)) > gap`` test).
+    µs gap is <= gap_us (exactly the batch operator's
+    ``unix_micros(ts) - unix_micros(lag(ts)) > gap`` test).
     Gap-sessionization is the connected components of the "within
     gap" relation on the time axis, so this fold is associative AND
     commutative over insertions — feeding events (width-0 intervals)
@@ -1021,7 +1018,7 @@ def _merge_intervals(iv, gap_s):
     last-timestamp sessionizer would be wrong."""
     out = []
     for s in sorted(iv):
-        if out and s[0] // 1_000_000 - out[-1][1] // 1_000_000 <= gap_s:
+        if out and s[0] - out[-1][1] <= gap_us:
             p = out[-1]
             out[-1] = (p[0], max(p[1], s[1]), p[2] + s[2], p[3] + s[3])
         else:
@@ -1032,7 +1029,7 @@ def _merge_intervals(iv, gap_s):
 def _update_sessionize(key, pdf_iter, state: GroupState):
     import pandas as pd
 
-    gap_s = _SESSIONIZE_GAP_S
+    gap_us = _SESSIONIZE_GAP_S * 1_000_000
     if state.exists:
         starts, ends, ns, cs, rev = state.get
         sessions = list(zip(starts, ends, ns, cs))
@@ -1059,16 +1056,16 @@ def _update_sessionize(key, pdf_iter, state: GroupState):
         sessions.extend(
             (int(t), int(t), 1, int(c)) for t, c in zip(ts_us, cents)
         )
-    sessions = _merge_intervals(sessions, gap_s)
-    # Eviction: once sec(end) + gap < sec(watermark), every future
-    # event the watermark admits has ts >= wm, hence a truncated-
-    # second gap > gap_s — the session can never be extended or
-    # bridged again, so it is emitted CLOSED and leaves the state.
-    # Per-user state is bounded by the user's live sessions inside
-    # the watermark horizon, not the stream.
-    wm_s = state.getCurrentWatermarkMs() // 1000
-    closed = [s for s in sessions if s[1] // 1_000_000 + gap_s < wm_s]
-    live = [s for s in sessions if s[1] // 1_000_000 + gap_s >= wm_s]
+    sessions = _merge_intervals(sessions, gap_us)
+    # Eviction: once end + gap < watermark (both in µs), every future
+    # event the watermark admits has ts >= wm, hence a gap > gap_us —
+    # the session can never be extended or bridged again, so it is
+    # emitted CLOSED and leaves the state.  Per-user state is bounded
+    # by the user's live sessions inside the watermark horizon, not
+    # the stream.
+    wm_us = state.getCurrentWatermarkMs() * 1000
+    closed = [s for s in sessions if s[1] + gap_us < wm_us]
+    live = [s for s in sessions if s[1] + gap_us >= wm_us]
     if live:
         state.update(
             (
@@ -1081,10 +1078,12 @@ def _update_sessionize(key, pdf_iter, state: GroupState):
         )
         # Fire a timeout once the watermark passes the last live
         # session's horizon, so an idle user's state still drains.
-        # (sec(end) + gap + 1 whole seconds is strictly above the
-        # current watermark whenever the session is live.)
+        # The timeout fires when the watermark (ms) exceeds floor((end
+        # + gap) / 1000), i.e. exactly when end + gap < wm in µs; the
+        # floor is never below the current watermark while the
+        # session is live.
         state.setTimeoutTimestamp(
-            (max(s[1] for s in live) // 1_000_000 + gap_s + 1) * 1000
+            (max(s[1] for s in live) + gap_us) // 1000
         )
     else:
         # Drain to an O(1) TOMBSTONE (empty session lists + the rev

@@ -267,3 +267,22 @@ def test_marker_spec_mismatch_forces_rebuild(spark, tmp_path):
     )
     assert built["n"] == 2, "mismatched marker must not be registered"
     assert out2.count() == 5
+
+
+def test_solo_time_disables_disk_tier(monkeypatch):
+    """tools/solo_time.py must drop SPARK_GRAFT_MEMO_DIR before it
+    times anything, as bench.py does: with the disk tier on, every rep
+    after the first reloads the persisted dedup tables instead of
+    paying its own mining cost."""
+    import os
+    import sys
+    from pathlib import Path
+
+    monkeypatch.syspath_prepend(str(Path(__file__).parents[1] / "tools"))
+    import solo_time
+
+    assert os.environ.get("SPARK_GRAFT_MEMO_DIR")
+    monkeypatch.setattr(sys, "argv", ["solo_time.py"])
+    with pytest.raises(SystemExit):  # no keys: exits before any session
+        solo_time.main()
+    assert "SPARK_GRAFT_MEMO_DIR" not in os.environ

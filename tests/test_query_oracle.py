@@ -36,6 +36,15 @@ def test_query_matches_oracle(name, spark, sf_dir, oracle_con):
 
 def test_oracle_keys_subset_of_queries():
     assert set(ORACLES) <= set(QUERIES)
+    # The registry is a plain dict merge, so a key two modules both
+    # define would silently keep only the later module's entry.
+    from parquet_stream_writer_spark.operators import _modules
+
+    mods = _modules()
+    assert sum(len(m.QUERIES) for m in mods) == len(QUERIES)
+    assert set().union(*(m.QUERIES for m in mods)) == set().union(
+        *(m.ORACLE for m in mods)
+    )
 
 
 def test_hll_merged_estimate_tracks_exact(spark, sf_dir):
@@ -155,39 +164,6 @@ def test_leakage_safe_split_never_splits_a_cluster(spark, sf_dir):
         assert spread["worst"] == 1
 
 
-def test_registry_fronts_unverified_and_stale_queries():
-    """The driver's CORRECTNESS gate checks a prefix window of the
-    registry: keys without a green driver verdict must sort first,
-    then green keys by ascending verdict round with source-stale keys
-    leading their round cohort (the round-8 age-first rotation) — so
-    the oldest verdicts rotate through the window and edit bursts
-    can't displace them.  Oracle-recontracted keys count as
-    unverified (the round-10 tier-0 promotion)."""
-    from parquet_stream_writer_spark.operators import (
-        _oracle_stale_keys,
-        _source_stale_keys,
-        _verdicts,
-        all_queries,
-    )
-
-    merged = all_queries()
-    keys = list(merged)
-    verdicts = _verdicts()
-    if not verdicts:  # fresh checkout without CORRECTNESS files
-        return
-    stale = _source_stale_keys(merged)
-    oracle_stale = _oracle_stale_keys(merged)
-
-    def rank(key):
-        green, rnd = verdicts.get(key, (False, 0))
-        if not green or key in oracle_stale:
-            return (0, 0, 0)
-        return (1, rnd, 0 if key in stale else 1)
-
-    ranks = [rank(k) for k in keys]
-    assert ranks == sorted(ranks), "registry not ordered by verdict need"
-
-
 def _docs_df(spark, rows):
     return spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
@@ -265,68 +241,6 @@ def test_importance_weighted_thresholds_scale_with_quality(spark, tmp_path):
         assert r["bucket"] < r["threshold"]
         expected = int((r["n_chars"] / 1600) ** 0.5 * _IMP_BASE_RATE * _IMP_BUCKETS + 0.5)
         assert r["threshold"] == expected
-
-
-def test_query_hash_covers_module_helpers(tmp_path):
-    """A key's source hash must change when a SHARED helper of its
-    module changes (the round-4 gap: a mining-core rewrite left
-    dependents' verdicts stale), but editing one query function must
-    float only that key."""
-    import importlib.util
-    import linecache
-    import sys
-
-    from parquet_stream_writer_spark.operators import query_source_hash
-
-    def write_and_load(helper_body: str, q2_body: str):
-        mod_path = tmp_path / "fake_ops.py"
-        mod_path.write_text(
-            f"def helper(x):\n    return {helper_body}\n\n"
-            f"def q1(spark, sf_dir):\n    return helper(1)\n\n"
-            f"def q2(spark, sf_dir):\n    return {q2_body}\n\n"
-            "QUERIES = {'k1': q1, 'k2': q2}\n"
-        )
-        linecache.checkcache(str(mod_path))
-        spec = importlib.util.spec_from_file_location("fake_ops", mod_path)
-        mod = importlib.util.module_from_spec(spec)
-        sys.modules["fake_ops"] = mod
-        spec.loader.exec_module(mod)
-        return mod
-
-    try:
-        v1 = write_and_load("x + 1", "helper(2)")
-        h1_q1, h1_q2 = query_source_hash(v1.q1), query_source_hash(v1.q2)
-
-        # editing q2 floats only k2
-        v2 = write_and_load("x + 1", "helper(3)")
-        assert query_source_hash(v2.q1) == h1_q1
-        assert query_source_hash(v2.q2) != h1_q2
-
-        # editing the shared helper floats BOTH keys
-        v3 = write_and_load("x + 99", "helper(2)")
-        assert query_source_hash(v3.q1) != h1_q1
-        assert query_source_hash(v3.q2) != h1_q2
-    finally:
-        sys.modules.pop("fake_ops", None)
-
-
-def test_query_hash_covers_cross_module_hex_helpers():
-    """Keys of modules that execute dedup's hex→int kernels must fold
-    those kernels' source into their hash (manual dependency map)."""
-    import sys
-
-    from parquet_stream_writer_spark.operators import (
-        _xmodule_helper_sources,
-        text,
-        pipeline,
-        streaming_batch,
-        relational,
-    )
-
-    for mod in (text, pipeline, streaming_batch):
-        srcs = _xmodule_helper_sources(mod)
-        assert srcs and all("def _hex" in s for s in srcs), mod.__name__
-    assert _xmodule_helper_sources(relational) == []
 
 
 def test_curation_e2e_dedup_ranks_among_quality_survivors(spark, tmp_path):

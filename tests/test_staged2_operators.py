@@ -30,23 +30,6 @@ def test_staged2_keys_registered():
     assert set(staged2.ORACLE) <= set(all_oracles())
 
 
-def test_staged2_unverified_keys_lead_the_window():
-    """Post-registration window invariant (the staged.py convention):
-    any staged2 key without a driver verdict is tier-0 and MUST sit
-    inside the 50-key prefix window.  Once CORRECTNESS_r08 lands,
-    these keys carry verdicts and correctly rotate out — the
-    assertion only binds while unverified keys exist."""
-    from parquet_stream_writer_spark import operators as ops
-
-    verdicts = dict(ops._verdicts())
-    unverified = [k for k in staged2.QUERIES if k not in verdicts]
-    if not unverified:
-        pytest.skip("all staged2 keys already hold driver verdicts")
-    window = list(ops.all_queries())[:50]
-    missing = [k for k in unverified if k not in window]
-    assert not missing, f"unverified staged2 keys outside the window: {missing}"
-
-
 @pytest.mark.parametrize("name", sorted(staged2.QUERIES))
 def test_staged2_query_survives_empty_corpus(name, spark, empty_sf):
     """The FULL staged2 pack against a schema-exact zero-row corpus:

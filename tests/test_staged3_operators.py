@@ -30,23 +30,6 @@ def test_staged3_keys_registered():
     assert set(staged3.ORACLE) <= set(all_oracles())
 
 
-def test_staged3_unverified_keys_lead_the_window():
-    """Post-registration window invariant (the staged.py convention):
-    any staged3 key without a driver verdict is tier-0 and MUST sit
-    inside the 50-key prefix window.  Once CORRECTNESS_r09 lands,
-    these keys carry verdicts and correctly rotate out — the
-    assertion only binds while unverified keys exist."""
-    from parquet_stream_writer_spark import operators as ops
-
-    verdicts = ops._verdicts()
-    unverified = [k for k in staged3.QUERIES if not verdicts.get(k, (False, 0))[0]]
-    if not unverified:
-        pytest.skip("all staged3 keys already hold driver verdicts")
-    window = list(ops.all_queries())[:50]
-    missing = [k for k in unverified if k not in window]
-    assert not missing, f"unverified staged3 keys outside the window: {missing}"
-
-
 @pytest.mark.parametrize("name", sorted(staged3.QUERIES))
 def test_staged3_query_survives_empty_corpus(name, spark, empty_sf):
     """The FULL staged3 pack against a schema-exact zero-row corpus:

@@ -28,29 +28,36 @@ def _write(tmp_path, name: str, pdf: pd.DataFrame) -> str:
     return str(d)
 
 
-@pytest.mark.parametrize("seed", [7, 301])
+@pytest.mark.parametrize("seed", [7, 301, "single_pair"])
 def test_kcore_peel_matches_bruteforce(spark, tmp_path, seed):
     """k-core trajectory vs an explicit python peel — the sparse
     random bipartite graph plants chains and pendants so rounds
-    actually shrink the graph (including full collapse)."""
+    actually shrink the graph (including full collapse).  The
+    ``single_pair`` case is one customer–supplier edge: both ends have
+    degree 1 < k, so round 1 peels every edge and must report
+    n_edges == 0, not NULL."""
     from parquet_stream_writer_spark.operators.staged3 import (
         _KCORE_K,
         _KCORE_ROUNDS,
         graph_kcore_peel,
     )
 
-    rng = np.random.default_rng(seed)
-    n = 240
+    if seed == "single_pair":
+        n, supps, custs = 1, np.array([3]), np.array([5])
+    else:
+        rng = np.random.default_rng(seed)
+        n = 240
+        supps, custs = rng.integers(0, 12, n), rng.integers(0, 60, n)
     li = pd.DataFrame(
         {
             "l_orderkey": np.arange(n, dtype="int64"),
-            "l_suppkey": rng.integers(0, 12, n).astype("int64"),
+            "l_suppkey": supps.astype("int64"),
         }
     )
     orders = pd.DataFrame(
         {
             "o_orderkey": np.arange(n, dtype="int64"),
-            "o_custkey": rng.integers(0, 60, n).astype("int64"),
+            "o_custkey": custs.astype("int64"),
         }
     )
     sf = _write(tmp_path, "lineitem", li)
@@ -76,6 +83,8 @@ def test_kcore_peel_matches_bruteforce(spark, tmp_path, seed):
             (rnd, len({a for a, _ in edges}), len(edges) // 2)
         )
     assert got == want
+    if seed == "single_pair":
+        assert got[0] == (1, 0, 0)
 
 
 @pytest.mark.parametrize("seed", [19, 808])

@@ -30,23 +30,6 @@ def test_staged4_keys_registered():
     assert set(staged4.ORACLE) <= set(all_oracles())
 
 
-def test_staged4_unverified_keys_lead_the_window():
-    """Post-registration window invariant (the staged.py convention):
-    any staged4 key without a driver verdict is tier-0 and MUST sit
-    inside the 50-key prefix window.  Once CORRECTNESS_r10 lands,
-    these keys carry verdicts and correctly rotate out — the
-    assertion only binds while unverified keys exist."""
-    from parquet_stream_writer_spark import operators as ops
-
-    verdicts = ops._verdicts()
-    unverified = [k for k in staged4.QUERIES if not verdicts.get(k, (False, 0))[0]]
-    if not unverified:
-        pytest.skip("all staged4 keys already hold driver verdicts")
-    window = list(ops.all_queries())[:50]
-    missing = [k for k in unverified if k not in window]
-    assert not missing, f"unverified staged4 keys outside the window: {missing}"
-
-
 def test_staged4_every_key_has_an_oracle():
     assert set(staged4.QUERIES) == set(staged4.ORACLE)
 

@@ -119,21 +119,3 @@ def test_readability_wordless_lang_nulls_match_oracle(spark, tmp_path):
     assert got["xx"].syllables_per_word is None
     assert got["xx"].flesch_ease is None
     assert got["en"].flesch_ease is not None
-
-
-def test_registered_staged_keys_rank_into_window_until_verified():
-    """Post-registration window invariant: any staged key that does
-    not yet hold a driver verdict is tier-0 and MUST sit inside the
-    50-key prefix window (that is the whole point of the flip).  Once
-    CORRECTNESS_r07 lands, these keys carry verdicts and correctly
-    rotate out — so the assertion only binds while unverified keys
-    exist."""
-    from parquet_stream_writer_spark import operators as ops
-
-    verdicts = dict(ops._verdicts())
-    unverified = [k for k in staged.QUERIES if k not in verdicts]
-    if not unverified:
-        pytest.skip("all staged keys already hold driver verdicts")
-    window = list(ops.all_queries())[:50]
-    missing = [k for k in unverified if k not in window]
-    assert not missing, f"unverified staged keys outside the window: {missing}"

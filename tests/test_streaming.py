@@ -1352,7 +1352,7 @@ def test_streaming_sessionize_matches_batch(spark, sf_dir, events_stream_dir):
     """The interval-merge sessionize twin must converge EXACTLY to the
     batch gaps-and-islands operator on the 4-file OUT-OF-TIME-ORDER
     replay — the order-freeness claim: sessions are the connected
-    components of the truncated-second "within 30 min" relation, so
+    components of the µs-grain "within 30 min" relation, so
     feeding events in any order across any micro-batch split yields
     the identical session set.  The huge watermark delay admits every
     late row and suppresses eviction, so each user's max-rev snapshot
@@ -1386,7 +1386,7 @@ def test_streaming_sessionize_matches_batch(spark, sf_dir, events_stream_dir):
 
 
 def test_streaming_sessionize_gap_matches_batch_constant():
-    """Drift guard: the twin's truncated-second gap must equal the
+    """Drift guard: the twin's session gap must equal the
     batch operator's _SESSION_GAP_MIN (the twin cannot import it at
     module scope without pulling the whole operators registry, so the
     suite pins the equality instead — self-review r15)."""
@@ -1398,6 +1398,72 @@ def test_streaming_sessionize_gap_matches_batch_constant():
     )
 
     assert _SESSIONIZE_GAP_S == _SESSION_GAP_MIN * 60
+
+
+def test_sessionize_fractional_gap_opens_new_session(spark, tmp_path):
+    """A gap of 1800.5 s is over the 30-min threshold, so it must open
+    a second session in the batch operator, its DuckDB oracle and the
+    streaming twin alike.  The pair is placed so whole-second
+    truncation (10:00:00.2 -> 10:00:00, 10:30:00.7 -> 10:30:00) would
+    see exactly 1800 s and wrongly keep one session; a pair exactly
+    1800 s apart stays one session everywhere."""
+    import datetime as dt
+    from collections import Counter
+
+    import duckdb
+    import pyarrow as pa
+
+    from parquet_stream_writer_spark.operators.streaming_batch import (
+        ORACLE_EVENTS_SESSIONIZE,
+        events_sessionize,
+    )
+    from parquet_stream_writer_spark.streaming.stateful import (
+        streaming_sessionize,
+    )
+
+    t0 = dt.datetime(2024, 3, 1, 10, 0, 0, 200_000)
+    rows = [
+        (1, t0, 1),
+        (2, t0 + dt.timedelta(seconds=1800.5), 1),  # new session
+        (3, t0, 2),
+        (4, t0 + dt.timedelta(seconds=1800), 2),  # same session
+    ]
+    ev_dir = tmp_path / "sf" / "events.parquet"
+    ev_dir.mkdir(parents=True)
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([r[0] for r in rows], pa.int64()),
+                "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
+                "user_id": pa.array([r[2] for r in rows], pa.int64()),
+                "event_type": pa.array(["view"] * len(rows)),
+                "value": pa.array([1.0] * len(rows), pa.float64()),
+                "props": pa.array(["{}"] * len(rows)),
+            }
+        ),
+        ev_dir / "part-0.parquet",
+    )
+
+    want = {1: 2, 2: 1}  # sessions per user
+    batch = events_sessionize(spark, str(tmp_path / "sf")).collect()
+    assert Counter(r.user_id for r in batch) == want
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{ev_dir}/*.parquet')"
+    )
+    oracle = con.sql(ORACLE_EVENTS_SESSIONIZE).fetchall()
+    con.close()
+    assert Counter(r[0] for r in oracle) == want
+
+    out = streaming_sessionize(
+        _events_stream(spark, ev_dir), watermark="3650 days"
+    )
+    pdf = _run_to_memory(
+        spark, out, f"sessf_{uuid.uuid4().hex[:8]}", "update"
+    ).toPandas()
+    final = pdf[pdf["rev"] == pdf.groupby("user_id")["rev"].transform("max")]
+    assert Counter(final.user_id.tolist()) == want
 
 
 def test_streaming_sessionize_timeout_evicts_closed_sessions(

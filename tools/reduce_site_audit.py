@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Alias-tracing reduce-site ENUMERATOR for the rotation window's
+"""Alias-tracing reduce-site ENUMERATOR for the registry's
 fractional-sum audit (mechanizes the transcription half of the sweep
 rounds 13-15 ran by hand; the CLASSIFICATION half stays a human read
 on purpose — a heuristic that silently passes a fractional sum is
@@ -29,7 +29,7 @@ fold order.
 
 Usage::
 
-    python tools/reduce_site_audit.py                  # 50-key window
+    python tools/reduce_site_audit.py                  # first 50 keys
     python tools/reduce_site_audit.py --window 100
     python tools/reduce_site_audit.py --keys a,b,c
     python tools/reduce_site_audit.py --all            # whole registry
