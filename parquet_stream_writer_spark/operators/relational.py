@@ -1206,6 +1206,13 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     region/date filters sit directly on scan columns (pushed down),
     and the same-nation predicate `c_nationkey = s_nationkey` prunes
     at the join, not after.
+
+    Revenue is summed exactly: price and discount are cast to
+    DECIMAL(15,2), so each term has 4 exact decimals and the sum does
+    not depend on the order rows arrive in. A double sum lands on
+    either side of a half cent depending on that order, and Spark and
+    DuckDB sum in different orders. The exact sum is rounded half up
+    to 2 dp, then cast to double.
     """
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
@@ -1235,16 +1242,23 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(asia), supplier.s_nationkey == asia.n_nationkey)
         .groupBy("n_name")
         .agg(
-            pround(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
+            F.round(
+                F.sum(
+                    F.col("l_extendedprice").cast("decimal(15,2)")
+                    * (1 - F.col("l_discount").cast("decimal(15,2)"))
+                ),
+                2,
+            )
+            .cast("double")
+            .alias("revenue")
         )
     )
 
 
 ORACLE_Q5 = """
 SELECT n_name,
-       floor((sum(l_extendedprice * (1 - l_discount))) * 100 + 0.5) / 100.0 AS revenue
+       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+                      * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2) AS DOUBLE) AS revenue
 FROM lineitem
 JOIN orders   ON l_orderkey = o_orderkey
 JOIN customer ON o_custkey  = c_custkey

@@ -13,12 +13,21 @@ fully distributed write path:
 2. convert the byte threshold into ``maxRecordsPerFile`` so every
    *task* rolls files at the target size — no coalesce(1), no driver
    data movement, scales linearly with executors;
-3. optionally rename the committed ``part-*`` files to the
-   deterministic ``prefix-N.parquet`` sequence (ordered by Spark's
-   part index, so the naming is stable run-to-run).
+3. read each committed ``part-*`` footer (no Spark job)
+   and delete the 0-row parts: Spark's task 0 writes a schema-only
+   file even when other tasks hold every row, and an empty input
+   writes nothing else, so ``write`` returns ``[]`` for it. The
+   reference never writes an empty file;
+4. optionally rename the remaining parts to the deterministic
+   ``prefix-N.parquet`` sequence (ordered by Spark's part index, so
+   the naming is stable run-to-run).
 
-On a real cluster step 3 is a metadata-only operation on the object
-store/namenode; the data never moves.
+On a real cluster steps 3 and 4 are footer reads and metadata-only
+operations on the object store/namenode; the data never moves.
+
+Step 1 runs once per ``write`` call unless the caller passes the
+estimate in (``write(df, row_bytes=...)``): ``StreamingShardSink``
+samples once per stream schema and reuses the figure.
 """
 
 from __future__ import annotations
@@ -26,6 +35,7 @@ from __future__ import annotations
 from pathlib import Path
 from typing import Any
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 
 #: Fallback per-value width (bytes) for variable-length types when no
@@ -95,8 +105,15 @@ class ShardedDatasetWriter:
         self.writer_options = writer_options
         self.written_files: list[Path] = []
 
-    def write(self, df: DataFrame) -> list[Path]:
-        rows_per_file = max(1, int(self.shard_size_bytes / estimate_row_bytes(df)))
+    def write(self, df: DataFrame, *, row_bytes: float | None = None) -> list[Path]:
+        """Write ``df``; return the shard paths (``[]`` if it has no rows).
+
+        ``row_bytes`` is an uncompressed bytes-per-row figure to size
+        the shards with; without it ``df`` is sampled
+        (``estimate_row_bytes``), which costs one Spark job."""
+        if row_bytes is None:
+            row_bytes = estimate_row_bytes(df)
+        rows_per_file = max(1, int(self.shard_size_bytes / row_bytes))
         if self.sort_by:
             # Cluster rows within each task before writing: parquet
             # stores per-row-group min/max stats, so sorted data turns
@@ -124,7 +141,12 @@ class ShardedDatasetWriter:
         # With partitionBy the part files live one dir per key; the
         # shard index restarts per partition directory.
         pattern = "*/" * len(self.partition_by) + "part-*.parquet"
-        parts = sorted(self.path.glob(pattern))
+        parts = []
+        for part in sorted(self.path.glob(pattern)):
+            if pq.read_metadata(part).num_rows > 0:
+                parts.append(part)
+            else:
+                part.unlink()
         if not self.deterministic_names:
             return [p.absolute() for p in parts]
         final: list[Path] = []

@@ -16,16 +16,32 @@ Two modes:
   distributed: each micro-batch is written with
   ``ShardedDatasetWriter`` under ``path/batch=N/``. Scales with the
   cluster; naming is deterministic per micro-batch.
+
+Either mode costs one Spark job per micro-batch: the write itself.
+There is no emptiness probe. An empty micro-batch converts to no
+Arrow batches in writer mode (lazy creation: no flush, no file); in
+distributed mode the writer drops Spark's 0-row part files, so the
+sink removes the empty ``batch=N/`` dir and records nothing.
+
+The distributed mode samples the row width (``estimate_row_bytes``,
+one more job) once per stream schema: the figure from the first
+micro-batch that wrote files sizes every later batch while
+``batch_df.schema`` stays equal, and a schema change samples again. A
+streaming query's schema is fixed for the life of the run, but its
+row *width* is not: if later batches carry much longer strings than
+the first, their shards grow past ``shard_size_bytes`` in proportion
+(and shrink below it if the rows get narrower).
 """
 
 from __future__ import annotations
 
+import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from parquet_stream_writer_spark.sink.sharded import ShardedDatasetWriter
+from parquet_stream_writer_spark.sink import sharded
 from parquet_stream_writer_spark.sink.stream_writer import ParquetStreamWriter
 
 
@@ -48,24 +64,35 @@ class StreamingShardSink:
         self.file_prefix = file_prefix
         self.batches_seen = 0
         self.written_files: list[Path] = []
+        # Bytes-per-row sample and the schema it was taken on.
+        self._row_bytes: float | None = None
+        self._row_schema = None
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         self.batches_seen += 1
-        if batch_df.isEmpty():  # lazy-creation parity: no files for empty batches
-            return
         if self.writer is not None:
             self.writer.write_dataframe(batch_df)
             self.written_files = list(self.writer.written_files)
             return
         out = self.path / f"batch={epoch_id}"
         out.parent.mkdir(parents=True, exist_ok=True)
-        sharded = ShardedDatasetWriter(
+        schema = batch_df.schema
+        row_bytes = self._row_bytes if schema == self._row_schema else None
+        if row_bytes is None:
+            row_bytes = sharded.estimate_row_bytes(batch_df)
+        files = sharded.ShardedDatasetWriter(
             out,
             shard_size_bytes=self.shard_size_bytes,
             file_prefix=self.file_prefix or self.path.name,
             overwrite=True,
-        )
-        self.written_files.extend(sharded.write(batch_df))
+        ).write(batch_df, row_bytes=row_bytes)
+        if not files:  # empty micro-batch: leave no batch=N/ dir
+            shutil.rmtree(out)
+            return
+        # Cache only a sample taken on rows: an empty batch's figure is
+        # the schema-width fallback.
+        self._row_bytes, self._row_schema = row_bytes, schema
+        self.written_files.extend(files)
 
     def start(self, stream_df: DataFrame, *, checkpoint: str | Path, available_now: bool = True) -> StreamingQuery:
         """Attach to a streaming DataFrame and start the query."""

@@ -1758,3 +1758,80 @@ def test_q17_matches_python_free_model(spark, tmp_path, seed):
         (b, math.floor(float(c) / 7.0 + 0.5) / 100.0) for b, c in rev.items()
     )
     assert got == expect and len(expect) > 0
+
+
+def test_q5_revenue_is_exact_at_the_half_cent(spark, tmp_path):
+    """``q5_local_supplier_volume`` and its oracle sum revenue exactly
+    (DECIMAL), so the half-cent rounding cannot depend on the order the
+    rows are summed in. The six hand-picked terms sum to exactly
+    34696.355; summed as doubles they round to .35 in 82% of the 720
+    orders (file order included) and to .36 in the rest."""
+    import duckdb
+
+    from parquet_stream_writer_spark.operators.relational import (
+        ORACLE_Q5,
+        q5_local_supplier_volume,
+    )
+
+    prices = [8973.64, 1278.16, 8065.25, 2191.94, 5983.59, 9217.24]
+    discounts = [0.06, 0.03, 0.04, 0.01, 0.0, 0.01]
+    float_sum = 0.0
+    for p, d in zip(prices, discounts):
+        float_sum += p * (1 - d)
+    assert math.floor(float_sum * 100 + 0.5) / 100 == 34696.35  # the trap is armed
+
+    n = len(prices)
+    dims = {
+        "customer": pd.DataFrame(
+            {"c_custkey": np.array([1], dtype="int64"), "c_name": ["c1"],
+             "c_nationkey": np.array([0], dtype="int32"), "c_acctbal": [0.0],
+             "c_mktsegment": ["BUILDING"]}
+        ),
+        "supplier": pd.DataFrame(
+            {"s_suppkey": np.array([1], dtype="int64"), "s_name": ["s1"],
+             "s_nationkey": np.array([0], dtype="int32"), "s_acctbal": [0.0]}
+        ),
+        "nation": pd.DataFrame(
+            {"n_nationkey": np.array([0], dtype="int32"), "n_name": ["CHINA"],
+             "n_regionkey": np.array([0], dtype="int32")}
+        ),
+        "region": pd.DataFrame(
+            {"r_regionkey": np.array([0], dtype="int32"), "r_name": ["ASIA"]}
+        ),
+        "orders": pd.DataFrame(
+            {"o_orderkey": np.arange(1, n + 1, dtype="int64"),
+             "o_custkey": np.ones(n, dtype="int64"), "o_orderstatus": ["O"] * n,
+             "o_totalprice": np.zeros(n),
+             "o_orderdate": pd.to_datetime(["1996-06-01"] * n),
+             "o_orderpriority": ["1-URGENT"] * n}
+        ),
+    }
+    for variant, order in (("forward", range(n)), ("reversed", range(n)[::-1])):
+        root = tmp_path / variant
+        root.mkdir()
+        li = pd.DataFrame(
+            {
+                # keys ascend in file order, so a key-sorted join keeps it
+                "l_orderkey": np.arange(1, n + 1, dtype="int64"),
+                "l_partkey": np.ones(n, dtype="int64"),
+                "l_suppkey": np.ones(n, dtype="int64"),
+                "l_linenumber": np.ones(n, dtype="int32"),
+                "l_quantity": np.ones(n),
+                "l_extendedprice": [prices[i] for i in order],
+                "l_discount": [discounts[i] for i in order],
+                "l_tax": np.zeros(n),
+                "l_returnflag": ["N"] * n,
+                "l_linestatus": ["O"] * n,
+                "l_shipdate": pd.to_datetime(["1996-07-01"] * n),
+            }
+        )
+        sf = _write(root, "lineitem", li)
+        for name, pdf in dims.items():
+            _write(root, name, pdf)
+        got = [(r.n_name, r.revenue) for r in q5_local_supplier_volume(spark, sf).collect()]
+        assert got == [("CHINA", 34696.36)], variant
+        con = duckdb.connect()
+        for name in ["lineitem", *dims]:
+            con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{sf}/{name}.parquet')")
+        assert con.sql(ORACLE_Q5).fetchall() == [("CHINA", 34696.36)], variant
+        con.close()

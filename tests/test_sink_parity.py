@@ -434,3 +434,17 @@ def test_empty_file_prefix_falls_back_to_dir_name(tmp_path):
         for i in range(3):
             w.write_batch(padded_batch(i))
     assert all(p.name.startswith("shards-") for p in out.glob("*.parquet"))
+
+
+def test_sharded_writer_drops_empty_task_file(tmp_path, spark):
+    """Spark's task 0 writes a schema-only part file even when the other
+    tasks hold every row. The writer must drop it before naming, like
+    the reference, which never writes an empty file."""
+    out = tmp_path / "zs"
+    df = spark.range(1000).repartition(4).where("id % 4 = 0 and id < 10")
+    files = ShardedDatasetWriter(out, shard_size_bytes=1 << 20).write(df)
+    rows = [pq.read_metadata(p).num_rows for p in files]
+    assert all(n > 0 for n in rows), rows
+    assert sorted(p.name for p in files) == [f"zs-{i}.parquet" for i in range(len(files))]
+    assert sum(rows) == 3
+    assert sorted(out.glob("*.parquet")) == sorted(files)

@@ -144,6 +144,67 @@ def test_foreachbatch_distributed_sink(spark, events_stream_dir, tmp_path):
     assert total == spark.read.parquet(str(events_stream_dir)).count()
 
 
+def test_sink_empty_micro_batches_write_nothing(spark, events_stream_dir, tmp_path):
+    """Empty micro-batches leave no file in either sink mode, and no
+    ``batch=N/`` dir in distributed mode."""
+    import pyarrow as pa
+
+    from parquet_stream_writer_spark import ParquetStreamWriter
+
+    stream = _events_stream(spark, events_stream_dir).where(F.lit(False))
+    dist = StreamingShardSink(path=tmp_path / "dist_out", shard_size_bytes=128 << 10)
+    dist.start(stream, checkpoint=tmp_path / "ckpt_dist").awaitTermination(120)
+    assert dist.batches_seen >= 1
+    assert dist.written_files == []
+    assert list((tmp_path / "dist_out").glob("batch=*")) == []
+
+    schema = pa.schema([("event_id", pa.int64()), ("event_type", pa.string())])
+    writer_path = tmp_path / "shard_out"
+    writer = ParquetStreamWriter(writer_path, schema, shard_size_bytes=64 << 10, buffer_size_bytes=1)
+    sink = StreamingShardSink(writer=writer)
+    sink.start(
+        stream.select("event_id", "event_type"), checkpoint=tmp_path / "ckpt_writer"
+    ).awaitTermination(120)
+    sink.close()
+    assert sink.batches_seen >= 1
+    assert list(writer_path.glob("*.parquet")) == []
+
+
+def test_distributed_sink_runs_one_job_per_micro_batch(
+    spark, events_stream_dir, tmp_path, monkeypatch
+):
+    """Steady state is one Spark job per micro-batch (the write): no
+    emptiness probe, and the row width is sampled once per stream and
+    sizes every batch's shards."""
+    from parquet_stream_writer_spark.sink import sharded
+
+    samples = []
+    real_estimate = sharded.estimate_row_bytes
+
+    def counting_estimate(df, *args, **kwargs):
+        samples.append(real_estimate(df, *args, **kwargs))
+        return samples[-1]
+
+    monkeypatch.setattr(sharded, "estimate_row_bytes", counting_estimate)
+    shard = 64 << 10
+    sink = StreamingShardSink(path=tmp_path / "dist_out", shard_size_bytes=shard)
+    q = sink.start(_events_stream(spark, events_stream_dir), checkpoint=tmp_path / "ckpt")
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert sink.batches_seen >= 4  # one per input file
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) <= sink.batches_seen + 1, (len(jobs), sink.batches_seen)
+    assert len(samples) == 1
+    # Every batch rolls its files at the sampled size: each holds more
+    # rows than one shard, so its largest file is exactly rows_per_file.
+    rows_per_file = int(shard / samples[0])
+    batch_dirs = sorted((tmp_path / "dist_out").glob("batch=*"))
+    assert len(batch_dirs) == sink.batches_seen
+    for d in batch_dirs:
+        rows = [pq.read_metadata(p).num_rows for p in d.glob("*.parquet")]
+        assert max(rows) == rows_per_file, (d.name, rows, rows_per_file)
+
+
 def test_stream_stream_interval_join(spark, sf_dir, events_stream_dir):
     """Click→purchase attribution: stream-stream inner join with a
     1-hour interval bound; result must equal the batch join."""
