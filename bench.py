@@ -16,13 +16,11 @@ checkpoint blocks). The payload marks those keys in ``memo_shared``.
 ``--cold`` (or SPARK_GRAFT_BENCH_COLD=1) clears the memo before every
 repetition for standalone per-query timings — the default stays warm
 because the driver's headline metric is the total pack wall time,
-which the memo legitimately reduces.  The CROSS-RUN disk tier is
-disabled unconditionally (``SPARK_GRAFT_MEMO_DIR`` popped below):
+which the memo legitimately reduces.  The memo is session-local, so
 every sweep pays the full mining cost inside the timed region of the
-first dedup-family key it reaches (VERDICT r18 item 1 — numbers
-subsidized by a previous run's persisted tables are result caching,
-not performance).  r18-and-earlier artifacts predate this and carry
-~0.05 s dedup-family entries that measured warehouse-table reads.
+first dedup-family key it reaches.  r18-and-earlier artifacts predate
+this and carry ~0.05 s dedup-family entries that measured reads of a
+previous run's mined tables.
 
 The full payload persists to ``bench_full_r{N}.json``. N is derived
 as max(BENCH_r*.json)+1, which assumes bench runs BEFORE the driver
@@ -51,12 +49,6 @@ from parquet_stream_writer_spark.session import get_session  # noqa: E402
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
-    # Never let a benchmark read (or write) the cross-run dedup-memo
-    # disk tier: timings must cover the declared computation from the
-    # parquet inputs, not a previous process's persisted intermediates
-    # (VERDICT r18 item 1).  The in-session memo stays — its build cost
-    # is inside this sweep's timed region.
-    os.environ.pop("SPARK_GRAFT_MEMO_DIR", None)
     sf = float(Path(sf_dir).name.removeprefix("sf") or 0) if "sf" in Path(sf_dir).name else 0.1
     cold = "--cold" in sys.argv[1:] or os.environ.get("SPARK_GRAFT_BENCH_COLD") == "1"
 

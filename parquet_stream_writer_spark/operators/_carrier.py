@@ -25,12 +25,6 @@ This helper fixes all three:
 - **FS-portable cleanup** — orphaned locations (a crashed run of this
   same process) are removed through the Hadoop FileSystem API, which
   resolves HDFS/S3/file warehouses alike, instead of ``shutil``.
-
-Hash-staleness note: this module is intentionally OUTSIDE the operator
-modules' helper hashes; the two query functions embed their carrier
-calls in their own hashed source, and edits HERE must float both graph
-keys manually (re-run their driver verification) — the same documented
-blind spot as package-level infra, backstopped by verdict-age rotation.
 """
 
 from __future__ import annotations

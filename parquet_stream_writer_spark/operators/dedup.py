@@ -86,25 +86,6 @@ _BUILD_LOCKS: dict[tuple, threading.RLock] = {}
 #: the process flat instead of accumulating dead checkpoint refs).
 _MEMO_CAP = 16
 
-#: Stages persistable ACROSS sessions as bucketed warehouse tables
-#: keyed on the corpus fingerprint — ONLY when the deployment opts in
-#: via ``SPARK_GRAFT_MEMO_DIR`` (VERDICT r18 item 1: the always-on
-#: disk tier let bench/driver runs skip the mining cost — cross-run
-#: result caching, removed; with the env unset these stages are
-#: session-local like every other memo entry).  Values are (bucket
-#: column, bucket count).  THREE stages qualify — the LSH candidate
-#: set, the verified pairs, and the CC labels; each is a deterministic
-#: function of the corpus bytes (md5 shingling + banded buckets, exact
-#: Jaccard, min-label fixpoint), so a reload is value-identical to a
-#: rebuild.  The corpus-sized shingle relation (the one intermediate
-#: that scales with total corpus bytes rather than with the near-dup
-#: pair count) is never persisted.
-_PERSIST_STAGES: dict[str, tuple[str, int]] = {
-    "lsh_candidates": ("d1", 16),
-    "verified_pairs": ("d1", 16),
-    "cc_labels": ("node", 16),
-}
-
 
 def _drop_entry(key: tuple) -> None:
     """Pop + unpersist one memo entry (caller holds ``_MEMO_LOCK``)."""
@@ -140,23 +121,7 @@ def _memo(
         # build runs OUTSIDE the dict lock: unrelated stages never
         # serialize behind it, and a build failure leaves the old
         # entries untouched (eviction is deferred until success).
-        if stage in _PERSIST_STAGES:
-            from parquet_stream_writer_spark.operators._memo_store import (
-                load_or_build_table,
-            )
-
-            bucket_col, buckets = _PERSIST_STAGES[stage]
-            df = load_or_build_table(
-                spark,
-                stage=stage,
-                sf_dir=sf_dir,
-                fingerprint=key[3],
-                bucket_col=bucket_col,
-                buckets=buckets,
-                build=build,
-            )
-        else:
-            df = build()
+        df = build()
         with _MEMO_LOCK:
             # Superseded same-(stage, app, dir) entries: the corpus
             # was rewritten, their checkpoints describe dead data.

@@ -1287,8 +1287,7 @@ def text_dedup_impact_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparisons over the deterministic mined components; counts and
     char sums are exact; the share is one division.
 
-    Shape: rides the memoized (optionally cross-session persisted — see
-    operators/_memo_store.py) CC labels: no re-mining, one node-sized
+    Shape: rides the memoized CC labels: no re-mining, one node-sized
     anti-representative filter, one join to documents on doc_id, one
     per-source hash aggregate with a left join so zero-impact sources
     still report.
@@ -1609,10 +1608,10 @@ def embedding_dedup_agreement_audit(
     (dot / sqrt(n1·n2 as doubles)) then scaled to an exact 4-dp
     integer, so every aggregate below is an order-free integer sum.
 
-    Shape: rides the memoized (optionally cross-session persisted) verified-pair
-    relation — no re-mining; two vec_id-keyed equi joins explode the
-    pair's two vectors, one dim-matched integer aggregate per pair,
-    one fixed-width summary row.
+    Shape: rides the memoized verified-pair relation — no re-mining;
+    two vec_id-keyed equi joins explode the pair's two vectors, one
+    dim-matched integer aggregate per pair, one fixed-width summary
+    row.
     """
     from parquet_stream_writer_spark.operators.dedup import _verified_pairs
 
@@ -2559,9 +2558,8 @@ def dedup_threshold_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines, so every ``jaccard >= τ`` comparison agrees; counts are
     exact integers.
 
-    Shape: rides the memoized (optionally cross-session persisted) verified-pair
-    relation — no re-mining; a bounded ×5 literal-threshold explode,
-    one hash aggregate per metric.
+    Shape: rides the memoized verified-pair relation — no re-mining; a
+    bounded ×5 literal-threshold explode, one hash aggregate per metric.
     """
     from parquet_stream_writer_spark.operators.dedup import _verified_pairs
 

@@ -406,8 +406,8 @@ def sample_dedup_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer division, identical in both engines); shares and ESS are
     single double expressions of exact integer sums, 6-/2-dp rounded.
 
-    Shape: rides the memoized connected-component labels (bucketed
-    persisted pairs → label fixpoint); one label⋈docs join, one
+    Shape: rides the memoized connected-component labels (verified
+    pairs → label fixpoint); one label⋈docs join, one
     cluster-size aggregate over the label relation (component-sized,
     tiny under the upstream bucket cap), one source rollup + a 1-row
     total broadcast.

@@ -101,10 +101,8 @@ def _knn_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups — the 2D-grid decomposition of distributed all-pairs.  The
     label rides along so no downstream join is needed to vote.
 
-    Deliberately a sibling of similarity.py's ``_pair_blocks`` rather
-    than an import: a cross-module helper edit would float every
-    similarity key's attested source hash at once (the module-helper
-    hash design), so each pack owns its copy of the convention; the
+    A sibling of similarity.py's ``_pair_blocks`` rather than an
+    import, so each pack owns its copy of the convention; the
     blocking here uses ``pmod`` so a negative vector id still lands in
     0..B-1 (a signed id under Spark's sign-preserving ``%`` would get
     a block no diagonal group ever forms for, silently dropping its

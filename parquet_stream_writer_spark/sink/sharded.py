@@ -18,7 +18,7 @@ fully distributed write path:
    file even when other tasks hold every row, and an empty input
    writes nothing else, so ``write`` returns ``[]`` for it. The
    reference never writes an empty file;
-4. optionally rename the remaining parts to the deterministic
+4. rename the remaining parts to the deterministic
    ``prefix-N.parquet`` sequence (ordered by Spark's part index, so
    the naming is stable run-to-run).
 
@@ -87,7 +87,6 @@ class ShardedDatasetWriter:
         file_prefix: str | None = None,
         overwrite: bool = False,
         compression: str = "snappy",
-        deterministic_names: bool = True,
         partition_by: list[str] | None = None,
         sort_by: list[str] | None = None,
         **writer_options: Any,
@@ -99,7 +98,6 @@ class ShardedDatasetWriter:
         self.file_prefix = file_prefix or self.path.name.removesuffix(".parquet")
         self.overwrite = overwrite
         self.compression = compression
-        self.deterministic_names = deterministic_names
         self.partition_by = list(partition_by) if partition_by else []
         self.sort_by = list(sort_by) if sort_by else []
         self.writer_options = writer_options
@@ -147,8 +145,6 @@ class ShardedDatasetWriter:
                 parts.append(part)
             else:
                 part.unlink()
-        if not self.deterministic_names:
-            return [p.absolute() for p in parts]
         final: list[Path] = []
         index: dict[Path, int] = {}
         for part in parts:

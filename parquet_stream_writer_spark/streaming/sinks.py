@@ -22,6 +22,8 @@ There is no emptiness probe. An empty micro-batch converts to no
 Arrow batches in writer mode (lazy creation: no flush, no file); in
 distributed mode the writer drops Spark's 0-row part files, so the
 sink removes the empty ``batch=N/`` dir and records nothing.
+``foreachBatch`` is at-least-once: a replayed epoch overwrites
+``batch=N/`` and replaces that batch's entries in ``written_files``.
 
 The distributed mode samples the row width (``estimate_row_bytes``,
 one more job) once per stream schema: the figure from the first
@@ -60,7 +62,9 @@ class StreamingShardSink:
             raise ValueError("provide either a ParquetStreamWriter or a path")
         self.writer = writer
         self.path = Path(path) if path is not None else None
-        self.shard_size_bytes = shard_size_bytes or (256 << 20)
+        self.shard_size_bytes = 256 << 20 if shard_size_bytes is None else shard_size_bytes
+        if self.shard_size_bytes <= 0:
+            raise ValueError("shard_size_bytes must be positive")
         self.file_prefix = file_prefix
         self.batches_seen = 0
         self.written_files: list[Path] = []
@@ -76,6 +80,9 @@ class StreamingShardSink:
             return
         out = self.path / f"batch={epoch_id}"
         out.parent.mkdir(parents=True, exist_ok=True)
+        if out.exists():  # at-least-once replay of epoch N: forget its files
+            stale = out.absolute()
+            self.written_files = [p for p in self.written_files if p.parent != stale]
         schema = batch_df.schema
         row_bytes = self._row_bytes if schema == self._row_schema else None
         if row_bytes is None:

@@ -72,6 +72,36 @@ def test_dedup_memo_invalidated_by_corpus_rewrite(spark, tmp_path):
     )
 
 
+def _dup_rows(tag: str, n_groups: int):
+    """n_groups near-dup pairs + singletons, content salted by tag."""
+    rows = []
+    for g in range(n_groups):
+        base = f"{tag} shared shingle content block number {g} " * 12
+        rows.append((g * 3, base, "en", "web", len(base)))
+        rows.append((g * 3 + 1, base + " tail", "en", "web", len(base) + 5))
+        solo = f"{tag} unique document {g} with entirely distinct words {g*7}"
+        rows.append((g * 3 + 2, solo, "en", "web", len(solo)))
+    return rows
+
+
+def test_corpus_rewrite_invalidates_cc_labels_memo(spark, tmp_path):
+    """Rewriting the corpus in place must change the fingerprint and
+    REBUILD the CC labels — stale memoized labels must never be matched."""
+    from parquet_stream_writer_spark.operators.dedup import (
+        dedup_connected_components,
+    )
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    _write_docs(spark, sf, _dup_rows("first", 4))
+    before = sorted(map(tuple, dedup_connected_components(spark, str(sf)).collect()))
+
+    _write_docs(spark, sf, _dup_rows("second", 7))  # different structure
+    after = sorted(map(tuple, dedup_connected_components(spark, str(sf)).collect()))
+    assert after != before
+    assert len(after) == 7 * 2  # 7 pair-components, singletons excluded
+
+
 def test_dedup_memo_shared_across_family(spark, tmp_path):
     """Connected components and the cluster representative must reuse
     the SAME verified-pair DataFrame object the miner produced (the

